@@ -35,16 +35,15 @@ from pyspark.sql import functions as F
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-# Headline set: one per engine pillar (agg, join, top-k, window, scoring,
-# text stats, dedup sketch, ANN, crawl building blocks).
+# Headline set: registered queries spanning every engine pillar (agg,
+# join, top-k, window, scoring, text stats, dedup sketches, ANN, crawl
+# building blocks, spans, streaming, curation).
 HEADLINE = [
     "q1_pricing_summary",
     "region_revenue",
     "top10_orders_revenue",
     "top3_orders_per_customer",
     "events_hourly",
-    "classify_documents",   # plan variant (unregistered; injected via the
-                            # qs.setdefault(...) block in main())
     "token_counts_top20",
     "doc_quality",
     "minhash_lsh_dedup",
@@ -62,49 +61,35 @@ HEADLINE = [
     "media_features",
     "cosine_neardup_exact",
     "cosine_neardup_lsh",
-    # round 2 additions: full scoring cascade, signal-dictionary-scale regex
-    # bank, tier merge, integration ladder, jsonschema UDF, simhash pairs.
     "classify_documents_full",
-    "classify_documents_fused",
     "signal_bank_extraction",
     "tier_merge",
     "integrate_records",
     "jsonschema_validation",
     "simhash_hamming_pairs",
-    # round 3 additions: E/V/L nested block assembly, NB06 translate, the
-    # full-RDLS-schema validator, and the end-to-end funnel.
     "exposure_block_assembly",
     "vulnerability_block_assembly",
     "loss_block_assembly",
     "translate_records",
     "full_schema_validation",
     "pipeline_funnel",
-    # interleaved-span analytics (input_hint table shape)
     "span_reassembly",
     "media_ref_dedup",
     "span_interleave_stats",
     "media_fetch_schedule",
     "stream_span_ingest",
     "stream_media_firstseen",
-    # round 4: near-dup clustering (pairs -> transitive components) and the
-    # ladder's terminal keep-list (corpus minus non-canonical members)
     "neardup_components",
     "dedup_keep_list",
-    # round 4: intra-doc repetition scoring + benchmark decontamination +
-    # deterministic corpus mixing
     "doc_repetition_score",
     "benchmark_decontamination",
     "corpus_mix_sample",
     "sequence_packing",
-    # round 4: curation surface — PII redaction, Gopher rules, BPE token
-    # profile, int8 embedding quantization, and the end-to-end funnel
     "pii_redaction",
     "gopher_quality_filter",
     "bpe_token_profile",
     "embedding_quantize_int8",
     "curation_funnel",
-    # round 4: ingestion-time dedup, export planning, tokenizer training,
-    # keyword extraction, domain-mix stats
     "incremental_dedup",
     "shard_manifest",
     "bpe_merge_candidates",
@@ -115,21 +100,15 @@ HEADLINE = [
     "quality_keep_rates",
     "embedding_norm_stats",
     "neardup_consensus",
-    # round 5: content-dedup digest path + streaming quality circuit-breaker
-    # + embedding-space (SemDeDup-shaped) dedup over the IVF quantizer cells
     "exact_text_dedup",
     "stream_quality_gate",
     "semantic_dedup",
     "ann_recall_report",
-    # round 5 continuation: component-level train/eval split (leakage-proof),
-    # cross-snapshot digest diff, token-budget mixture planning
     "leakage_safe_split",
     "snapshot_diff",
     "mix_epochs_plan",
     "cross_source_neardup_matrix",
     "minhash_accuracy_report",
-    # round 5 continuation #3: ANN index skew audit, cluster-size histogram
-    # (CC-memo rider), packing fragmentation report
     "ivf_cell_stats",
     "neardup_cluster_histogram",
     "packing_fragmentation",
@@ -140,16 +119,12 @@ HEADLINE = [
     "lsh_bucket_stats",
     "pii_hit_report",
     "hot_shingle_report",
-    # winnowing (MOSS) — the local/position-aware sketch family
     "winnowing_fingerprints",
     "winnowing_overlap_pairs",
-    # eval-integrity + threshold-calibration + tier-attribution reports
     "eval_leak_report",
     "neardup_threshold_sweep",
     "dedup_stage_attribution",
-    # streaming near-dup ingestion gate (stateful pigeonhole buckets)
     "stream_neardup_gate",
-    # tokenizer-sizing coverage report
     "vocab_coverage",
 ]
 
@@ -237,10 +212,7 @@ def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict
 
     out_dir = tempfile.mkdtemp(prefix="bench_crawl_docs_")
     t0 = time.time()
-    candidates = bloom.bloom_anti_join(
-        frontier, seen, blooms, n_partitions=128,
-        mode=os.environ.get("SPARK_GRAFT_PROBE_MODE", "copartition"),
-    )
+    candidates = bloom.bloom_anti_join(frontier, seen, blooms, n_partitions=128)
 
     scheduled = politeness_slots(candidates, rps=2.0, n_salts=64)
     # Round-robin fetch partitions, mirroring the engine (frontier.py step
@@ -309,13 +281,8 @@ def main() -> int:
         return 0
 
     import __spark_entry__ as entrymod
-    from hdx_metadata_crawler_spark.plans import queries_text as _qt
 
-    qs = dict(entrymod.queries())
-    # plan variants consolidated out of the registry (round 3) but still
-    # benchmarked: both physical strategies of the A2 classify cascade
-    qs.setdefault("classify_documents", _qt.classify_documents)
-    qs.setdefault("classify_documents_fused", _qt.classify_documents_fused)
+    qs = entrymod.queries()
     # tolerate sf dirs whose basename is not 'sf<number>' (report sf=None
     # instead of dying after all queries already ran)
     import re as _re
@@ -362,9 +329,8 @@ def main() -> int:
         "cores": args.cores,
         "crawl": crawl,
         # Measurement honesty: these queries share process-level memos — the
-        # simhash pair tier + component labels (VERDICT r04 item 6), the
-        # MinHash(32) signature frame, and (continuation #3) the IVF
-        # centroid block — so within this suite only the FIRST consumer of
+        # simhash pair tier + component labels, the MinHash(32) signature
+        # frame, and the IVF centroid block — so within this suite only the FIRST consumer of
         # each memo pays that cost and the best-of-2 minimum for the others
         # is a memo-hit wall.  The suite TOTAL is the meaningful engine
         # number for the family; a standalone cold run of any one
@@ -387,10 +353,8 @@ def main() -> int:
             "ivf_cell_stats",
         ],
     }
-    # The driver records only a bounded TAIL of stdout and json-parses the
-    # graded line from it; round 4's full per-query line outgrew that buffer
-    # and the official artifact recorded "parsed": null (VERDICT r04 item 1).
-    # Fix: the full payload goes to a file + stderr (human/judge artifact);
+    # Consumers of the graded line keep only a bounded TAIL of stdout and
+    # json-parse it, so the full payload goes to a file + stderr and
     # stdout carries exactly ONE compact line, shrunk to a hard byte budget
     # by dropping the fastest per-query timings first (headline total, crawl
     # and suite size always survive).

@@ -6,8 +6,9 @@
 then thresholds: ≥5 candidate, ≥7 high confidence, ≥4 medium, else low.
 
 Here the whole cascade is a generated column-expression DAG — one ``select``,
-zero shuffles, fully codegen'd.  Patterns are baked into the plan as literals
-(the reference captures them in closures; Catalyst constant-folds them).
+zero shuffles (``plans/queries_text.classify_documents_full``).  Patterns are
+baked into the plan as literals (the reference captures them in closures;
+Catalyst constant-folds them).
 """
 
 from __future__ import annotations
@@ -29,21 +30,6 @@ def keyword_hit_count(text_col: Column, patterns: list[str]) -> Column:
     for h in hits[1:]:
         out = out + h
     return out
-
-
-def component_score(
-    text_col: Column,
-    patterns: list[str],
-    exclusion_patterns: list[str] | None = None,
-    keyword_weight: int = 2,
-    exclusion_penalty: int = 3,
-) -> Column:
-    """keyword_weight × hits − exclusion_penalty × exclusion hits, floored at 0
-    (04…ipynb:357-410 exclusion handling; SURVEY.md P11)."""
-    score = keyword_hit_count(text_col, patterns) * F.lit(keyword_weight)
-    if exclusion_patterns:
-        score = score - keyword_hit_count(text_col, exclusion_patterns) * F.lit(exclusion_penalty)
-    return F.greatest(F.lit(0), score)
 
 
 def confidence_bucket(

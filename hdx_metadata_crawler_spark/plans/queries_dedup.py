@@ -2055,12 +2055,14 @@ SWEEP_MIN = min(SWEEP_BPS) / 10000.0
     WITH v AS (SELECT vec_id,
                       list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
                FROM embeddings),
-    sw_pairs AS (
+    sw_cos AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(round({dedup.COSINE_SQL.format(a="a.ve", b="b.ve")} * 10000, 0)
-               AS BIGINT) AS cos_bp
+             {dedup.COSINE_SQL.format(a="a.ve", b="b.ve")} AS cos4
       FROM v a JOIN v b ON a.vec_id < b.vec_id
-      WHERE {dedup.COSINE_SQL.format(a="a.ve", b="b.ve")} >= {SWEEP_MIN}
+    ),
+    sw_pairs AS (
+      SELECT id_a, id_b, CAST(round(cos4 * 10000, 0) AS BIGINT) AS cos_bp
+      FROM sw_cos WHERE cos4 >= {SWEEP_MIN}
     ),
     sw_spine AS (
       SELECT CAST(t AS BIGINT) AS threshold_bp
@@ -2096,8 +2098,9 @@ SWEEP_MIN = min(SWEEP_BPS) / 10000.0
         "reports surviving pair count and distinct docs involved at its "
         "cutoff — the pairs-vs-threshold curve read before fixing "
         "semantic_dedup's threshold.  Zero-pair cutoffs kept via the "
-        "threshold spine; integer compares on both engines (no float "
-        "boundary in the value hash).",
+        "threshold spine.  Both engines gate on and project the cosine "
+        "rounded to 4 dp (the kernel's np.round(sims, 4); COSINE_SQL's "
+        "round(.., 4)), then compare integers.",
 )
 def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_pairs_block
@@ -2229,8 +2232,6 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the union recursively, and re-derives every flag independently.",
 )
 def dedup_stage_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     sh_pairs = _simhash_pair_tier(spark, sf_dir).select("id_a", "id_b")
     mh_pairs = _mh_consensus_pairs(spark, sf_dir)

@@ -60,71 +60,36 @@ _LOADED = False
 # iteration order) for its CORRECTNESS report.  Plain import order would
 # fill that window with core/text/dedup alone, leaving whole families
 # (blocks, spans, streaming, quality, integration, multimodal) invisible.
-# We therefore (a) pin one block of flagship queries — the families that
-# would otherwise land past slot 50 — to the front, then (b) round-robin
-# the remaining queries one-per-module so every family keeps several rows
-# inside any prefix window.
+# We therefore (a) seat the must-sample block below at the front, then
+# (b) one query from every module not yet represented, then (c) the
+# flagship block, then (d) round-robin the rest one-per-module.
+#
+# Must-sample rule: seat every query whose plan or oracle changed since its
+# last driver CORRECTNESS row.  A query leaves this list once the driver
+# has recorded a green row for its current plan and oracle.
 _PRIORITY_NAMES = [
-    # ---- round-5 window rotation (VERDICT r04 item 2): the 12 queries that
-    # have never appeared in any driver CORRECTNESS window, plus tier_matrix
-    # (whose only driver row ever is the stale r01 FAIL — fixed in r2 but
-    # never driver-re-sampled).  Seating them first makes the union of
-    # r01–r05 driver rows cover every registered query.
-    "tier_matrix",
-    "gopher_quality_filter",
-    "translate_blocked",
-    "bpe_token_profile",
-    "embedding_quantize_int8",
-    "mix_rate_report",
-    "triplet_constraint_validation",
-    "currency_detection",
-    "signal_bank_extraction",
-    "hazard_context_resolution",
-    "reference_year_extraction",
-    "compound_tag_expansion",
-    "socioeconomic_indicators",
-    # round-5 additions (new this round -> never driver-sampled either)
-    "stream_quality_gate",
-    "semantic_dedup",
-    "ann_recall_report",
-    "leakage_safe_split",
-    "snapshot_diff",
-    "mix_epochs_plan",
-    "cross_source_neardup_matrix",
-    "minhash_accuracy_report",
-    "ivf_cell_stats",
-    "neardup_cluster_histogram",
-    "packing_fragmentation",
-    "char_class_profile",
-    "dup_quality_interaction",
-    "recrawl_priority",
-    "rare_token_score",
-    "lsh_bucket_stats",
-    "pii_hit_report",
-    "hot_shingle_report",
-    "winnowing_fingerprints",
-    "winnowing_overlap_pairs",
-    "eval_leak_report",
+    # classify has one body (the zero-shuffle cascade, NULL text == ''),
+    # and its consumers read it
+    "classify_documents_full",
+    "top15_candidates",
+    "review_override_apply",
+    "pipeline_funnel",
+    # oracle gates on the 4-dp cosine, as the kernel does
     "neardup_threshold_sweep",
-    "dedup_stage_attribution",
-    "stream_neardup_gate",
-    "vocab_coverage",
-    # ---- exact_text_dedup is the one round-5 PLAN-CHANGED query that has
-    # never been driver-sampled — it must keep a window seat.  The other
-    # plan-changed entries (exact_dedup_groups, minhash_lsh_dedup,
-    # ngram_jaccard_pairs, doc_repetition_score, tfidf_top_terms,
-    # curation_funnel, duplicate_passages) were rotated OUT to seat the
-    # seven new never-sampled queries — each holds at least one
-    # driver-green CORRECTNESS row (r01–r04), and their r5 plan changes
-    # are locally re-verified through the identical gate.
-    "exact_text_dedup",
+    # plan rewrites with no driver row since
+    "exact_dedup_groups",
+    "minhash_lsh_dedup",
+    "ngram_jaccard_pairs",
+    "doc_repetition_score",
+    "tfidf_top_terms",
+    "curation_funnel",
+    "duplicate_passages",
 ]
 
-# Flagship per-family block (kept from round 4; families that would
-# otherwise land past slot 50 under plain import order).  Seated AFTER the
-# one-per-module samples: every entry here already has a driver-green r04
-# CORRECTNESS row, so when the must-sample block grows, it is these — not
-# the module coverage guarantee — that spill past the 50-slot window.
+# Flagship per-family block (families that would otherwise land past slot
+# 50 under plain import order).  Seated AFTER the one-per-module samples:
+# when the must-sample block grows, it is these — not the module coverage
+# guarantee — that spill past the 50-slot window.
 _FLAGSHIP_NAMES = [
     # blocks (RDLS assembly pipeline)
     "exposure_block_assembly",
@@ -170,13 +135,11 @@ _FLAGSHIP_NAMES = [
 def _reorder_for_driver_window() -> None:
     """Rebuild REGISTRY so any 50-entry prefix samples every query module.
 
-    Order: (1) the must-sample rotation block (never-driver-sampled +
-    plan-changed queries — the entries that NEED a driver row this round),
-    (2) ONE query from every module not already represented — this is what
-    keeps the guarantee as the must-sample list grows toward the window
-    size, (3) the flagship per-family block (all driver-green in r04, so
-    they are the right entries to spill past the window), (4) the remainder
-    round-robined one-per-module."""
+    Order: (1) the must-sample block (queries whose plan or oracle changed
+    since their last driver row), (2) ONE query from every module not
+    already represented — this is what keeps the guarantee as the
+    must-sample list grows toward the window size, (3) the flagship
+    per-family block, (4) the remainder round-robined one-per-module."""
     from collections import defaultdict
 
     ordered: dict[str, QuerySpec] = {}

@@ -12,12 +12,12 @@ Design for the 10^10-URL frontier (SURVEY §4 physical strategy 1):
   whole-map-broadcastable, which is why the probe is co-partitioned
   (below); 6.1 MB per task trivially is.  ``test_crawl_engine.py::
   test_bloom_design_point_sizing`` pins these numbers.
-- Probe path (co-partitioned, executor-side — no driver collect, no
-  whole-state broadcast): candidates gain ``partition_id = pmod(hash, P)``
-  and are cogrouped with the blooms table on it, so each task holds exactly
-  ONE partition's bitset and probes its slice of candidates in a vectorized
-  Arrow batch (numpy bit math, no per-row Python).  The driver never holds
-  any bitset.  Bloom-NEGATIVE candidates are *definitely unseen* — they
+- Probe path (the only one: co-partitioned, executor-side — no driver
+  collect, no whole-state broadcast): candidates gain ``partition_id =
+  pmod(hash, P)`` and are cogrouped with the blooms table on it, so each
+  task holds exactly ONE partition's bitset and probes its slice of
+  candidates in a vectorized Arrow batch (numpy bit math, no per-row
+  Python).  The driver never holds any bitset.  Bloom-NEGATIVE candidates are *definitely unseen* — they
   skip the exact join entirely.  Bloom-POSITIVE candidates (true hits +
   ~1% false positives) are rescued with an exact anti-join on url_hash so
   a false positive can NEVER silently drop a URL (SURVEY §7.4 risk 2).
@@ -266,80 +266,31 @@ def _copartition_flag(
     )
 
 
-def _broadcast_flag(
-    candidates: DataFrame, blooms: DataFrame, hash_col: str, n_partitions: int
-) -> DataFrame:
-    """candidates + _maybe_seen via a broadcast column UDF — shuffle-free,
-    but the whole filter state passes through the driver: caller-opt-in
-    small-state path ONLY."""
-    spark = candidates.sparkSession
-    bloom_rows = blooms.collect()
-    _check_partitioning(bloom_rows, n_partitions, "bloom_anti_join[broadcast]")
-    bloom_map = {
-        r["partition_id"]: (r["m"], np.unpackbits(np.frombuffer(r["bitset"], dtype=np.uint8)))
-        for r in bloom_rows
-    }
-    bc = spark.sparkContext.broadcast(bloom_map)
-    n_part_bc = spark.sparkContext.broadcast(n_partitions)
-
-    @F.pandas_udf(BooleanType())
-    def maybe_seen(h: pd.Series) -> pd.Series:
-        bm = bc.value
-        if not bm:
-            return pd.Series(np.zeros(len(h), dtype=bool))
-        hashes = h.to_numpy(dtype=np.int64).view(np.uint64)
-        parts = (h.to_numpy(dtype=np.int64) % n_part_bc.value + n_part_bc.value) % n_part_bc.value
-        out = np.zeros(len(h), dtype=bool)
-        for p in np.unique(parts):
-            if p not in bm:
-                continue
-            m, bits = bm[p]
-            mask = parts == p
-            pos = _probe_positions(hashes[mask], m)
-            out[mask] = bits[pos].all(axis=1)
-        return pd.Series(out)
-
-    return candidates.withColumn("_maybe_seen", maybe_seen(F.col(hash_col)))
-
-
 def bloom_anti_join(
     candidates: DataFrame,
     seen: DataFrame,
     blooms: DataFrame,
     hash_col: str = "url_hash",
     n_partitions: int = 16,
-    mode: str = "copartition",
 ) -> DataFrame:
     """candidates ∖ seen, bloom-accelerated and false-drop-free.
 
-    Plan (mode="copartition", the default and the ONLY design that holds at
-    the 10^10-key design point): candidates are repartitioned by
-    ``pmod(url_hash, P)`` and cogrouped with the blooms table on
-    partition_id, so each task receives its slice of candidates plus the
-    SINGLE bloom row it needs (~6 MB at the design point, see module
-    docstring) and probes it vectorized.  No task ever holds more than its
-    own partition's bitset, and the driver holds none — a collect-all +
-    whole-map broadcast is a 25 GB driver/broadcast memory wall at the
-    design point.  Only the maybe-seen slice (≈ |true hits| + ~1% of the
-    rest) takes the exact anti-join; the definitely-unseen slice passes
-    through.  Probe parallelism equals P, so size P to a small multiple of
-    cluster cores.
-
-    mode="broadcast" keeps the small-state fast path: collect the bitsets
-    once, broadcast, and probe as a shuffle-free column UDF at the
-    candidates' full partitioning.  Valid ONLY while the aggregate bitset
-    bytes are broadcast-sized (local tests, early crawl rounds); it is the
-    caller's opt-in, never the default.
+    Plan: candidates are repartitioned by ``pmod(url_hash, P)`` and
+    cogrouped with the blooms table on partition_id, so each task receives
+    its slice of candidates plus the SINGLE bloom row it needs (~6 MB at
+    the design point, see module docstring) and probes it vectorized.  No
+    task ever holds more than its own partition's bitset, and the driver
+    holds none — a collect-all + whole-map broadcast would be a 25 GB
+    driver/broadcast memory wall at the design point.  Only the maybe-seen
+    slice (≈ |true hits| + ~1% of the rest) takes the exact anti-join; the
+    definitely-unseen slice passes through.  Probe parallelism equals P, so
+    size P to a small multiple of cluster cores.
 
     The build-time/probe-time ``n_partitions`` invariant is validated
-    inside the probe task in copartition mode (a mismatch would silently
-    hash keys to absent partitions → false negatives), so the error
-    surfaces at action time; broadcast mode validates eagerly.
+    inside the probe task (a mismatch would silently hash keys to absent
+    partitions → false negatives), so the error surfaces at action time.
     """
-    if mode == "broadcast":
-        flagged = _broadcast_flag(candidates, blooms, hash_col, n_partitions)
-    else:
-        flagged = _copartition_flag(candidates, blooms, hash_col, n_partitions)
+    flagged = _copartition_flag(candidates, blooms, hash_col, n_partitions)
     # Persist the flagged frontier: both branches (pass-through and rescue)
     # consume it, and without a persist the probe + candidate lineage would
     # be recomputed once per branch (measured ~2x the probe cost per round).

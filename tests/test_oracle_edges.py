@@ -33,13 +33,11 @@ def _parity(spark, tmp_path, name, round_floats=4):
 
     spark_rows = norm([row.asDict() for row in out.collect()])
     con = duckdb.connect()
-    for t in ("events", "documents"):
-        p = tmp_path / f"{t}.parquet"
-        if p.exists():
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{p}/*.parquet')"
-            )
+    for p in tmp_path.glob("*.parquet"):
+        con.sql(
+            f"CREATE VIEW {p.stem} AS SELECT * FROM "
+            f"read_parquet('{p}/*.parquet')"
+        )
     orc = con.sql(entry.oracle_sql()[name])
     oracle_rows = norm([dict(zip(orc.columns, row)) for row in orc.fetchall()])
     assert spark_rows == oracle_rows
@@ -98,3 +96,57 @@ def test_ngram_jaccard_null_text_parity(spark, tmp_path):
     _parity(spark, tmp_path, "ngram_jaccard_pairs")
     _parity(spark, tmp_path, "minhash_lsh_dedup")
     _parity(spark, tmp_path, "simhash_fingerprints")
+
+
+def test_classify_null_empty_and_org_hint_parity(spark, tmp_path):
+    """NULL text scores exactly like empty text: the org hint alone still
+    counts (src1 -> stream 3).  The fixture also covers every org-hint
+    substring (src1 / src19 / rc2), an all-exclusion text and the
+    single-best component fallback."""
+    rows = [
+        (0, None, "src1", "en", 0),
+        (1, "", "src1", "en", 0),
+        (2, None, "src19", "en", 0),
+        (3, "", "src2", "en", 0),
+        (4, "slow slow slow", "src1", "en", 14),
+        (5, "slow slow slow", "src3", "en", 14),
+        (6, "join filter table stream batch window", "src19", "en", 37),
+        (7, "a table scan over every row and column part", "src20", "en", 43),
+        (8, "stream batch merge with a watermark event", "src12", "en", 41),
+        (9, "sort the group then slow join", "src5", "en", 29),
+        (10, None, None, "en", 0),
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, source string, lang string, n_chars long"
+    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    _parity(spark, tmp_path, "classify_documents_full")
+    _parity(spark, tmp_path, "top15_candidates")
+
+
+def test_neardup_threshold_sweep_floor_boundary_parity(spark, tmp_path):
+    """The sweep's kernel gates on the cosine rounded to 4 dp, so a pair at
+    cosine 0.29996 survives the 0.30 floor with cos_bp 3000 and one at
+    0.29994 does not; the oracle must gate and project the same value."""
+    def unit_pair(cos):
+        return [float(cos), float((1.0 - cos * cos) ** 0.5), 0.0, 0.0]
+
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0], 0),
+        (1, unit_pair(0.29996), 0),
+        (2, [0.0, 0.0, 1.0, 0.0], 1),
+        (3, [0.0, 0.0, 0.29994, (1.0 - 0.29994**2) ** 0.5], 1),
+        (4, [0.0, 0.0, 0.0, 1.0], 2),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+    out = {
+        r["threshold_bp"]: r["n_pairs"]
+        for r in entry.queries()["neardup_threshold_sweep"](
+            spark, str(tmp_path)
+        ).collect()
+    }
+    # 0-1 (0.29996 -> 3000) is in, 2-3 (0.29994 -> 2999) is out, and 3-4
+    # (0.95396) passes every cutoff.
+    assert out[3000] == 2 and out[4000] == 1
+    _parity(spark, tmp_path, "neardup_threshold_sweep")

@@ -78,7 +78,7 @@ def main() -> int:
 
     t = time.time()
     candidates = bloom.bloom_anti_join(
-        frontier, seen, blooms, n_partitions=128, mode="copartition"
+        frontier, seen, blooms, n_partitions=128
     ).cache()
     candidates.count()
     phases["probe"] = round(time.time() - t, 2)
