@@ -4,7 +4,8 @@
 Default: run the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus one crawl-round
 throughput measurement (the BASELINE.json metric: frontier URLs/sec +
-fetched docs/sec), and print ONE JSON line:
+fetched docs/sec of one real ``CrawlEngine`` round), and print ONE JSON
+line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
    "crawl": {"urls_per_sec": ..., "docs_per_sec": ...}}
@@ -14,11 +15,12 @@ Scaling mode (north rule: efficiency >= 0.8 from N to 4N parallelism):
   python bench.py --crawl-only --cores 8 --n-urls 240000
   python bench.py --crawl-only --cores 32 --n-urls 240000
 
-runs ONLY the crawl-round dataflow (canonicalize -> bloom seen-set probe +
-exact rescue anti-join -> per-host politeness window -> salted host-hash
-repartition -> Arrow fetch stage -> interleaved span assembly -> count) at
-the given parallelism and prints its own JSON line.  tools/run_scaling.py
-invokes both levels in subprocesses and writes the efficiency report.
+runs ONLY the crawl block — one ``CrawlEngine.run`` round whose page is
+the whole seed list (bloom seen-set probe + exact rescue -> page -> robots
+-> politeness -> round-robin Arrow fetch -> routing + span assembly ->
+checkpoint -> seen-store append) — at the given parallelism and prints its
+own JSON line.  tools/run_scaling.py invokes both levels in subprocesses
+and writes the efficiency report.
 """
 
 import argparse
@@ -30,7 +32,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -147,108 +148,31 @@ def _materialize(df) -> int:
 
 
 def crawl_round_throughput(spark: SparkSession, n_urls: int, cores: int) -> dict:
-    """One frontier round's dataflow over n_urls synthetic seed URLs — the
-    north-rule metric.  Mirrors streaming/frontier.py's per-round plan with
-    a 30%-pre-seen seen-set so the bloom probe + exact rescue both do work.
-    The fetch stage is the deterministic resolver (sha256-based record
-    synthesis — CPU-bound, like real parse+extract work per document)."""
+    """One CrawlEngine round over n_urls synthetic seed URLs, paged whole:
+    probe, page, robots, politeness, fetch, spans, checkpoint and seen-store
+    append, exactly as a crawl runs them.  The fetch stage is the
+    deterministic resolver (sha256-based record synthesis — CPU-bound, like
+    real parse+extract work per document)."""
     import shutil
     import tempfile
 
-    import pandas as pd
-
-    from hdx_metadata_crawler_spark.functions.url import url_hash
     from hdx_metadata_crawler_spark.sources import synthetic
-    from hdx_metadata_crawler_spark.streaming import bloom
-    from hdx_metadata_crawler_spark.streaming.frontier import (
-        _FETCH_SCHEMA,
-        _fetch_batches,
-        build_spans,
-        politeness_slots,
-    )
-    from pyspark.sql.functions import pandas_udf
+    from hdx_metadata_crawler_spark.streaming.frontier import CrawlConfig, CrawlEngine
 
-    # Fixed task counts at every parallelism level: the scaling experiment is
-    # "same job, two cluster sizes" (north rule) — only executor threads vary.
-    n_tasks = 128
-
-    @pandas_udf("string")
-    def seed_url_udf(seq: pd.Series) -> pd.Series:
-        return seq.map(synthetic.seed_url)
-
-    frontier = (
-        spark.range(n_urls, numPartitions=n_tasks)
-        .select(seed_url_udf(F.col("id")).alias("canon_url"))
-        .select(
-            "canon_url",
-            url_hash(F.col("canon_url")).alias("url_hash"),
-            F.regexp_extract("canon_url", r"^https?://([^/]+)", 1).alias("host"),
-            F.lit(0).alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit(0).alias("attempt"),
-        )
-    ).cache()
-    # 30% already seen → bloom-positive; the rest skip the exact join.
-    seen = frontier.filter(F.pmod("url_hash", F.lit(10)) < 3).select(
-        "url_hash", "canon_url"
-    ).cache()
-    # Materialize inputs outside the timed region — in the engine the round
-    # reads frontier/seen from the previous checkpoint snapshot, so synthetic
-    # generation cost must not pollute the round measurement.
-    frontier.count()
-    seen.count()
-
-    # Bloom state is built OUTSIDE the timed region: the engine round being
-    # modeled reads its blooms from the previous checkpoint and maintains
-    # them incrementally — an O(|seen|) rebuild inside the measurement would
-    # misattribute checkpoint-amortized work to the round (and grow with
-    # n_urls).  Same rule as the frontier/seen materialization above.
-    blooms = bloom.build_blooms(seen, n_partitions=128).cache()
-    blooms.count()  # materialized: the timed probe reads the cached state
-    # True candidate count (reported, not timed): frontier minus seen.
-    n_candidates = frontier.join(
-        seen.select("url_hash"), "url_hash", "left_anti"
-    ).count()
-
-    out_dir = tempfile.mkdtemp(prefix="bench_crawl_docs_")
-    t0 = time.time()
-    candidates = bloom.bloom_anti_join(frontier, seen, blooms, n_partitions=128)
-
-    scheduled = politeness_slots(candidates, rps=2.0, n_salts=64)
-    # Round-robin fetch partitions, mirroring the engine (frontier.py step
-    # 4): politeness is already fully encoded in time_slot, and the previous
-    # (host, url_hash % 64) hash partitioning measured max/mean task load of
-    # 3.30 on the 70%-hot-host universe — a straggler tail that binds the
-    # 4N-core run while N-core runs amortize it over more task waves.
-    fetched = (
-        scheduled.repartition(n_tasks)
-        .mapInPandas(_fetch_batches, _FETCH_SCHEMA)
-        .withColumn("round", F.lit(0))
-    )
-    docs = build_spans(fetched.filter(F.col("status") == "ok"))
-    # Single pass ending in the engine's real sink (parquet snapshot); row
-    # count rides the write job as an observation (no second read job).
-    from pyspark.sql import Observation
-
-    obs = Observation("bench_docs")
-    docs.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(out_dir)
-    n_docs = obs.get["n"]
-    wall = time.time() - t0
-    frontier.unpersist()
-    seen.unpersist()
-    blooms.unpersist()
-    bloom.release_persisted()
-    shutil.rmtree(out_dir, ignore_errors=True)
+    ckpt = tempfile.mkdtemp(prefix="bench_crawl_")
+    engine = CrawlEngine(spark, ckpt, CrawlConfig(page_size=n_urls, max_rounds=1))
+    try:
+        m = engine.run(seed_urls=synthetic.seed_urls(n_urls))["metrics"][0]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {engine._seen_table}")
+        shutil.rmtree(ckpt, ignore_errors=True)
     return {
         "body_scale": int(os.environ.get("SPARK_GRAFT_BODY_SCALE", "1")),
         "n_urls": n_urls,
-        "n_candidates": n_candidates,
-        "n_docs": n_docs,
-        "wall_sec": round(wall, 3),
-        "urls_per_sec": round(n_urls / wall, 1),
-        "docs_per_sec": round(n_docs / wall, 1),
+        "n_docs": m["n_ok"],
+        "wall_sec": m["wall_sec"],
+        "urls_per_sec": m["urls_per_sec"],
+        "docs_per_sec": round(m["n_ok"] / m["wall_sec"], 1),
         "cores": cores,
     }
 

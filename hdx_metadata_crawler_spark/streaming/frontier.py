@@ -2,40 +2,47 @@
 
 Re-expresses NB01's single-process crawl loop (``01…ipynb:738-830
 run_dataset_crawl``) as a driver-side iteration of declarative per-round
-Spark plans (SURVEY §3.1 'Spark re-expression'):
+Spark plans (SURVEY §3.1 'Spark re-expression').  ``CrawlEngine.run`` is
+the only implementation of a round; each step below is one phase method,
+and every Spark job a phase submits is described as ``crawl r<N> <phase>``:
 
 round r:
-  1. candidates = frontier ∖ seen       — partitioned-Bloom probe + exact
-                                          anti-join rescue (bloom.py)
-  2. page      = top page_size by (priority, canon_url)  — the reference's
-                                          deterministic id-asc page order
-  3. schedule  = per-host fetch_seq/time_slot at rps     — politeness
-                                          (window over salted host groups)
-  4. fetch     = mapInPandas over host-hash-salted partitions calling the
-                 deterministic resolver (sources/synthetic.fetch — the same
-                 function the pure-Python oracle simulator calls)
-  5. route     = ok → manifest+documents (+discovered → frontier′)
-                 retry → frontier′ with attempt+1 (≤ max_retries)
-                 else → errors
-  6. commit    = parquet snapshot of {frontier, seen, manifest, errors,
-                 documents} + atomic _COMMIT.json (metrics + lineage);
-                 a killed run resumes from the last committed round with
-                 identical state (tested in tests/test_crawl_engine.py).
+  1. probe_page = frontier ∖ seen (partitioned-Bloom probe + exact
+                  anti-join rescue, bloom.py), then the top page_size by
+                  (priority, canon_url) — the reference's deterministic
+                  id-asc page order
+  2. robots     = Disallow prefixes → errors+seen; Crawl-delay → per-host rps
+  3. fetch      = per-host fetch_seq/time_slot at rps (politeness window
+                  over salted host sub-queues), then mapInPandas over
+                  round-robin partitions calling the deterministic resolver
+                  (sources/synthetic.fetch — the same function the
+                  pure-Python oracle simulator calls)
+  4. route      = ok → manifest+documents (+discovered → frontier′)
+                  retry → frontier′ with attempt+1 (≤ max_retries)
+                  else → errors
+  5. checkpoint = parquet snapshot of {frontier, blooms}, per-round deltas
+                  of {seen, manifest, errors, documents}, and an atomic
+                  _COMMIT.json (metrics); a killed run resumes from the last
+                  committed round with identical state (tested in
+                  tests/test_crawl_engine.py)
+  6. seen_append = the committed seen delta joins the bucketed seen store
 
 Documents are written with interleaved text+media spans assembled
 SPARK-SIDE (array/struct/transform with index lambdas — no Python), matching
 the input_hint schema (doc_id, spans array<struct<kind,text,media_ref,
 offset>>) plus per-partition lineage columns (round, partition_id, source).
 
-Scale design: the only shuffles per round are (a) the co-partitioned bloom
+Scale design: the main shuffles per round are (a) the co-partitioned bloom
 probe (candidates repartitioned by pmod(url_hash, P)) plus the rescue
 anti-join on bloom-positive candidates — the seen side of that join is a
 catalog table bucketed on url_hash, so ONLY the round-sized candidate slice
-exchanges, never the O(10^10) seen set — (b) the page top-k, (c) one
-repartition by salted host-hash before the fetch stage.  The hot-host skew (≥70% of URLs on
-one host) is broken by salting the repartition key with pmod(url_hash, S) —
-politeness stays correct because fetch slots were assigned *before* the
-salt split, per host globally.
+exchanges, never the O(10^10) seen set — (b) the page top-k, (c) the
+politeness window's repartition on (host, salt), and (d) one round-robin
+repartition before the fetch stage.  The hot-host skew (≥70% of URLs on
+one host) is broken twice: the politeness sort splits each host into
+politeness_salts sub-queues, and the fetch partitions are balanced by
+construction.  Politeness stays correct because time_slot is assigned per
+host globally before the fetch repartition.
 """
 
 from __future__ import annotations
@@ -105,16 +112,14 @@ _FETCH_SCHEMA = StructType(
     ]
 )
 
-_STATE_TABLES = ("frontier", "seen", "manifest", "errors", "documents")
 # Mutable tables are snapshotted in full every round (they change in place
 # and stay O(frontier)); append-only tables write ONLY the round's delta —
 # checkpoint cost is O(round output), not O(total crawl history).  blooms is
 # the incrementally-maintained seen-set filter (bloom.merge_blooms): O(16
 # bitsets) to snapshot, O(round additions) to update — never rebuilt from
-# the full seen set.  `seen` is append-only too (round 2): URLs are only
-# ever ADDED, so each round writes just the newly-finalized slice — the
-# round-1 full-seen rewrite was the one checkpoint cost that grew with
-# crawl history (O(10^10) per round at the design point).
+# the full seen set.  `seen` is append-only: URLs are only ever ADDED, so
+# each round writes just the newly-finalized slice, and a full-seen rewrite
+# would be O(10^10) per round at the design point.
 _MUTABLE_TABLES = ("frontier", "blooms")
 _MUTABLE_SCHEMAS = {"blooms": bloom.BLOOM_DDL}
 _APPEND_TABLES = ("seen", "manifest", "errors", "documents")
@@ -155,9 +160,7 @@ class CrawlConfig:
     # / K total rewrite bytes) against per-round file count (<= K *
     # seen_buckets).  64 keeps both negligible at the design point.
     seen_compact_rounds: int = 64
-    # (host_salt removed round 4: the fetch stage round-robins — politeness
-    # lives in time_slot, and salted host-hash partitioning measurably skewed)
-    fetch_partitions: int = 16
+    fetch_partitions: int = 16  # round-robin fetch tasks (fewer on small pages)
     politeness_salts: int = 8  # parallel sub-queues per host (see politeness_slots)
     respect_robots: bool = True  # robots.txt disallow + crawl-delay budgets
 
@@ -190,8 +193,6 @@ def politeness_slots(
     come in as ``rps_col`` — a per-row rps column already joined onto the
     page from the broadcast robots dim (the round loop's form; zero driver
     state).  The budget folds into the slot expression at no extra cost.
-    (A legacy literal-map dict parameter was removed in round 3: no caller
-    used it, and dead parity surface is drift risk.)
     """
     salt = F.pmod(F.crc32(F.encode("canon_url", "utf-8")), F.lit(n_salts)).cast("int")
     if rps_col is None:
@@ -298,6 +299,16 @@ class CrawlEngine:
             os.path.abspath(ckpt_dir).encode()
         ).hexdigest()[:12]
         self._seen_appends = 0  # appends since the last rebuild/compaction
+        # Per-run join inputs, set by run(): the bucketed seen store and the
+        # broadcast robots policy dim + default policy (None without robots).
+        self._seen_store: DataFrame | None = None
+        self._robots_dim: DataFrame | None = None
+        self._robots_default: tuple[list[str], float] | None = None
+
+    def _describe(self, rnd: int, phase: str) -> None:
+        """Label the Spark jobs this thread submits next as
+        ``crawl r<rnd> <phase>`` (Spark UI and event log)."""
+        self.spark.sparkContext.setJobDescription(f"crawl r{rnd} {phase}")
 
     # ------------------------------------------------------------------ state
     def _round_dir(self, rnd: int) -> str:
@@ -332,12 +343,14 @@ class CrawlEngine:
         deltas: dict[str, DataFrame],
         metrics: dict,
     ) -> None:
-        """Per-round checkpoint + atomic commit marker (reference analogue:
-        write_json tmp+os.replace, 01…ipynb:557 — here the marker rename is
-        the atomic commit point; uncommitted round dirs are ignored on
-        resume).  frontier/seen are full snapshots; manifest/errors/
-        documents write only this round's delta, so a round's checkpoint
-        cost never grows with crawl history (the Iceberg-append analogue)."""
+        """Checkpoint phase: per-round state + atomic commit marker
+        (reference analogue: write_json tmp+os.replace, 01…ipynb:557 — here
+        the marker rename is the atomic commit point; uncommitted round dirs
+        are ignored on resume).  The mutable frontier and blooms are full
+        snapshots; seen/manifest/errors/documents write only this round's
+        delta, so a round's checkpoint cost never grows with crawl history
+        (the Iceberg-append analogue).  The table writes' wall is stamped
+        into ``metrics`` as ``write_sec`` before the marker persists them."""
         rdir = self._round_dir(rnd)
         tmp = rdir + ".tmp"
         if os.path.exists(tmp):
@@ -352,17 +365,17 @@ class CrawlEngine:
             (deltas[name], os.path.join(tmp, f"{name}_delta"))
             for name in _APPEND_TABLES
         ]
+
+        def write(df: DataFrame, path: str) -> None:
+            # Spark local properties do not cross into pool threads
+            self._describe(rnd, "checkpoint")
+            df.write.mode("overwrite").parquet(path)
+
+        t0 = time.time()
         with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            futures = [
-                pool.submit(
-                    lambda df, path: df.write.mode("overwrite").parquet(path),
-                    df,
-                    path,
-                )
-                for df, path in jobs
-            ]
-            for fut in futures:
+            for fut in [pool.submit(write, df, path) for df, path in jobs]:
                 fut.result()
+        metrics["write_sec"] = round(time.time() - t0, 3)
         with open(os.path.join(tmp, "_COMMIT.json"), "w") as f:
             json.dump({"round": rnd, "metrics": metrics}, f, indent=2)
         if os.path.exists(rdir):
@@ -441,6 +454,7 @@ class CrawlEngine:
         small-file listing wall.  Crash-safety is inherited: the store is a
         derived accelerator rebuilt from committed deltas at every run
         start, so a crash mid-compaction costs nothing."""
+        self._describe(rnd, "seen_append")
         delta = self.spark.read.schema(_APPEND_SCHEMAS["seen"]).parquet(
             os.path.join(self._round_dir(rnd), "seen_delta")
         )
@@ -458,7 +472,7 @@ class CrawlEngine:
             return self._rebuild_seen_store(full)
         return self.spark.table(self._seen_table)
 
-    # ------------------------------------------------------------------- run
+    # ------------------------------------------------------------------ seed
     def seed_state(self, seed_urls: list[str]) -> dict[str, DataFrame]:
         spark = self.spark
         seeds = (
@@ -489,17 +503,254 @@ class CrawlEngine:
             empty[name] = spark.createDataFrame([], ddl)
         return empty
 
-    def run(self, seed_urls: list[str] | None = None, resume: bool = False) -> dict:
+    # ---------------------------------------------------------- round phases
+    def _probe_page(self, rnd: int, state: dict[str, DataFrame]) -> tuple[DataFrame, int]:
+        """candidates = frontier ∖ seen, then the deterministic page: top
+        page_size by (priority, canon_url), cached and counted."""
+        self._describe(rnd, "probe_page")
+        # probe the incrementally-maintained bloom state (never rebuilt from
+        # the full seen set) + exact rescue for bloom-positives
+        candidates = bloom.bloom_anti_join(
+            state["frontier"], self._seen_store, state["blooms"],
+            n_partitions=self.cfg.bloom_partitions,
+        )
+        page = (
+            candidates.orderBy("priority", "canon_url")
+            .limit(self.cfg.page_size)
+            .cache()
+        )
+        return page, page.count()
+
+    def _robots_split(
+        self, rnd: int, page: DataFrame
+    ) -> tuple[DataFrame | None, DataFrame, DataFrame]:
+        """Robots budgeting: Disallow prefixes route to errors+seen,
+        Crawl-delay overrides the per-host rps (north rule).  The page
+        broadcast-joins the run-level robots dim on host (hosts absent from
+        the dim get the default policy) — the exact shape that holds at
+        10^10 scale, with zero driver-side data dependency inside the round
+        loop.  Returns (cached flagged page or None, allowed, blocked);
+        allowed carries the per-host budget as ``_rps_host``."""
+        self._describe(rnd, "robots")
+        if not self.cfg.respect_robots:
+            return None, page, page.filter(F.lit(False))
+        def_prefixes, def_rps = self._robots_default
+        def_prefix_arr = (
+            F.array(*[F.lit(p) for p in def_prefixes])
+            if def_prefixes
+            else F.array().cast("array<string>")
+        )
+        # path-less URL => '/', matching robots.url_path: a Disallow prefix
+        # of '/' (disallow-all) must block 'https://host' too — the bare
+        # regex yields '' there, which startswith('/') would miss.
+        raw_path = F.regexp_extract("canon_url", r"^https?://[^/]+([^?#]*)", 1)
+        path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
+        disallowed_flag = F.exists(
+            F.coalesce(F.col("r_prefixes"), def_prefix_arr),
+            lambda p: path.startswith(p),
+        )
+        flagged_page = (
+            page.join(F.broadcast(self._robots_dim), "host", "left")
+            .withColumn("_disallowed", disallowed_flag)
+            .withColumn("_rps_host", F.coalesce("r_rps", F.lit(def_rps)))
+            .drop("r_prefixes", "r_rps")
+            .cache()
+        )
+        blocked = flagged_page.filter(F.col("_disallowed")).drop(
+            "_disallowed", "_rps_host"
+        )
+        allowed = flagged_page.filter(~F.col("_disallowed")).drop("_disallowed")
+        return flagged_page, allowed, blocked
+
+    def _schedule_fetch(
+        self, rnd: int, allowed: DataFrame, n_page: int
+    ) -> tuple[DataFrame, dict[str, int]]:
+        """Politeness slots, then the fetch over round-robin partitions;
+        returns the cached fetched frame and its status counts."""
+        self._describe(rnd, "fetch")
         cfg = self.cfg
+        # salted per-host sub-queues → time_slot at the per-host rps budget
+        rps_col = F.col("_rps_host") if cfg.respect_robots else None
+        scheduled = politeness_slots(
+            allowed, cfg.rps, cfg.politeness_salts, rps_col=rps_col
+        )
+        if rps_col is not None:
+            scheduled = scheduled.drop("_rps_host")
+
+        # Politeness is fully encoded in time_slot by this point, so the
+        # fetch partitioning is purely a load-balancing choice.  RoundRobin
+        # is balanced by construction (max/mean task load 1.002), where
+        # hashing on (host, url_hash % salt) put the 70%-hot-host traffic
+        # behind a few keys (max/mean 3.30 at 64 salts / 128 tasks) — a
+        # straggler tail that costs ~25% of 4N-core scaling efficiency.  A
+        # connection-pooling fetcher that wants host affinity should group
+        # WITHIN a partition, not skew the partitioning.  The partition count
+        # adapts to the page: a retry-tail round with a handful of URLs would
+        # otherwise spin up cfg.fetch_partitions Python workers for nothing
+        # (~2.5 s fixed cost per near-empty round, measured).
+        n_fetch = max(1, min(cfg.fetch_partitions, (n_page + 63) // 64))
+        fetched = (
+            scheduled.repartition(n_fetch)
+            .mapInPandas(_fetch_batches, _FETCH_SCHEMA)
+            .withColumn("round", F.lit(rnd))
+            .cache()
+        )
+        status_counts = {
+            (r["status"], r["exhausted"]): r["cnt"]
+            for r in fetched.groupBy(
+                "status", (F.col("attempt") + 1 > cfg.max_retries).alias("exhausted")
+            ).agg(F.count("*").alias("cnt")).collect()
+        }
+        counts = {
+            "n_ok": sum(v for (s, _e), v in status_counts.items() if s == "ok"),
+            "n_retry": status_counts.get(("retry", False), 0),
+            "n_error": sum(
+                v for (s, e), v in status_counts.items()
+                if s == "error" or (s == "retry" and e)
+            ),
+        }
+        return fetched, counts
+
+    def _route(
+        self,
+        rnd: int,
+        state: dict[str, DataFrame],
+        page: DataFrame,
+        fetched: DataFrame,
+        blocked: DataFrame,
+    ) -> tuple[dict[str, DataFrame], dict[str, DataFrame], int]:
+        """ok → manifest + documents (+ discovered → frontier′); retry →
+        frontier′ with attempt+1 (≤ max_retries); error, exhausted retry and
+        robots-blocked → errors.  Returns the next mutable snapshots, this
+        round's append deltas, and the robots-blocked count."""
+        self._describe(rnd, "route")
+        cfg = self.cfg
+        frontier = state["frontier"]
+        ok = fetched.filter(F.col("status") == "ok")
+        retry = fetched.filter(F.col("status") == "retry")
+        err_now = fetched.filter(F.col("status") == "error")
+        err_exhausted = retry.filter(F.col("attempt") + 1 > cfg.max_retries)
+        retry_next = retry.filter(F.col("attempt") + 1 <= cfg.max_retries)
+
+        # manifest (crawl-order contract: rank by (priority, canon_url)).
+        # Two-phase rank: a bare Window.orderBy would pull the whole page
+        # through ONE task; range-partition + local row_number + prefix-sum
+        # offsets gives the identical ranking N-way parallel
+        # (operators/ranking.py).
+        manifest_new = two_phase_rank(
+            ok.select(
+                "round", "canon_url", "dataset_id", "title", "host",
+                "time_slot", "attempt", "priority",
+            ),
+            ["priority", "canon_url"],
+            num_partitions=max(2, cfg.fetch_partitions // 4),
+        ).select(
+            "round",
+            # bounded by page_size — safe to narrow the operator's long
+            F.col("rank").cast("int").alias("rank"),
+            "canon_url", "dataset_id", "title", "host",
+            "time_slot", "attempt",
+        )
+
+        robots_blocked = blocked.select(
+            F.lit(rnd).alias("round"),
+            "canon_url",
+            F.regexp_extract("canon_url", r"/(?:dataset|hdx)/([^/]+)", 1).alias(
+                "dataset_id"
+            ),
+            F.lit("robots_disallowed").alias("error"),
+        )
+        errors_new = err_now.select(
+            "round", "canon_url", "dataset_id",
+            F.lit("permanent_fetch_error").alias("error"),
+        ).unionByName(
+            err_exhausted.select(
+                "round", "canon_url", "dataset_id",
+                F.lit("max_retries_exceeded").alias("error"),
+            )
+        ).unionByName(robots_blocked)
+
+        # frontier′ = (frontier ∖ page) ∪ retries(attempt+1) ∪ discovered
+        remaining = frontier.join(page.select("url_hash"), "url_hash", "left_anti")
+        retry_rows = retry_next.select(
+            "canon_url", "url_hash", "host", "priority", "depth",
+            (F.col("attempt") + 1).alias("attempt"),
+        )
+        # min-depth aggregation, NOT dropDuplicates: when one URL is
+        # discovered by parents at different depths in the same round,
+        # dropDuplicates keeps an arbitrary task's row (crawl order then
+        # varies run-to-run), while the simulator keeps the first parent in
+        # manifest rank order — which is exactly the min-depth parent (rank
+        # leads with priority = depth).  min() is the deterministic engine
+        # equivalent.
+        discovered = (
+            ok.select(F.explode("discovered").alias("raw_url"), "depth")
+            .select(
+                F.trim("raw_url").alias("canon_url"),
+                url_hash(F.trim("raw_url")).alias("url_hash"),
+                F.regexp_extract(F.trim("raw_url"), r"^https?://([^/]+)", 1).alias("host"),
+                (F.col("depth") + 1).alias("depth"),
+            )
+            .groupBy("url_hash", "canon_url", "host")
+            .agg(F.min("depth").alias("depth"))
+            .select(
+                "canon_url", "url_hash", "host",
+                F.col("depth").alias("priority"), "depth",
+                F.lit(0).alias("attempt"),
+            )
+            .join(frontier.select("url_hash"), "url_hash", "left_anti")
+            .join(self._seen_store.select("url_hash"), "url_hash", "left_anti")
+        )
+        frontier_next = remaining.unionByName(retry_rows).unionByName(
+            discovered.select(*[f.name for f in FRONTIER_SCHEMA.fields])
+        )
+
+        # seen′ = seen ∪ finalized (ok + permanent/exhausted errors +
+        # robots-disallowed, so blocked URLs can never requeue);
+        # blooms′ = blooms OR bloom(finalized) — incremental, O(round)
+        finalized = (
+            ok.select("url_hash", "canon_url")
+            .unionByName(err_now.select("url_hash", "canon_url"))
+            .unionByName(err_exhausted.select("url_hash", "canon_url"))
+            .unionByName(blocked.select("url_hash", "canon_url"))
+        )
+        blooms_next = bloom.merge_blooms(
+            state["blooms"], finalized, n_partitions=cfg.bloom_partitions,
+            seen=state["seen"].unionByName(finalized),
+        )
+        n_blocked = blocked.count() if cfg.respect_robots else 0
+
+        mutable = {"frontier": frontier_next, "blooms": blooms_next}
+        deltas = {
+            # seen is append-only: persist ONLY this round's finalized URLs;
+            # _read_state unions the per-round deltas back into the full
+            # seen set (write cost O(round), not O(history)).
+            "seen": finalized.dropDuplicates(["url_hash"]),
+            "manifest": manifest_new,
+            "errors": errors_new,
+            "documents": build_spans(ok),
+        }
+        return mutable, deltas, n_blocked
+
+    # ------------------------------------------------------------------- run
+    def run(self, seed_urls: list[str] | None = None, resume: bool = False) -> dict:
+        """Crawl rounds until the frontier is empty or ``cfg.max_rounds``;
+        ``resume=True`` continues after the last committed round.
+
+        Each round's metrics carry walls taken only where the round already
+        blocks: ``page_sec`` (probe + page count), ``fetch_phase_sec``
+        (through fetch and routing), ``write_sec`` (checkpoint table writes),
+        ``seen_append_sec``, ``checkpoint_sec`` (writes + commit + seen
+        append) and ``wall_sec``."""
+        cfg = self.cfg
+        sc = self.spark.sparkContext
+        caller_description = sc.getLocalProperty("spark.job.description")
         last = self.latest_committed_round() if resume else None
+        start_round = 0 if last is None else last + 1
+        self._describe(start_round, "setup")
         if last is not None:
             state = self._read_state(last)
-            start_round = last + 1
-            # Reload prior rounds' metrics from their commit markers so a
-            # resumed run()['metrics'] covers the whole crawl, not just the
-            # post-crash rounds.  (The marker is written before the round's
-            # wall timing exists, so reloaded entries carry counts but not
-            # wall_sec — in-session timings remain in-session.)
+            # markers persist the counts, page_sec, fetch_phase_sec, write_sec
             if not self.metrics.rounds:
                 for r in self._committed_rounds(last):
                     with open(
@@ -509,7 +760,6 @@ class CrawlEngine:
         else:
             assert seed_urls is not None, "seed_urls required for a fresh run"
             state = self.seed_state(seed_urls)
-            start_round = 0
             if os.path.isdir(self.ckpt_dir):
                 shutil.rmtree(self.ckpt_dir)
             os.makedirs(self.ckpt_dir, exist_ok=True)
@@ -518,281 +768,70 @@ class CrawlEngine:
         # deltas (O(|seen|) once, amortized across the whole run), then
         # appended per round — every per-round anti-join against it reads
         # the bucketing as output partitioning, no seen-side Exchange.
-        seen_store = self._rebuild_seen_store(state["seen"])
+        self._seen_store = self._rebuild_seen_store(state["seen"])
 
         # Robots policy dim, built ONCE per run (not per round): explicit
         # rows for hosts with a non-default robots.txt + the default policy
         # for everything else.  The page joins this broadcast-side — no
         # driver-side collect of data-derived hosts anywhere in the loop.
-        robots_dim = None
-        robots_default: tuple[list[str], float] | None = None
         if cfg.respect_robots:
-            rows, robots_default = robots.policy_table(cfg.rps)
-            robots_dim = self.spark.createDataFrame(
+            rows, self._robots_default = robots.policy_table(cfg.rps)
+            self._robots_dim = self.spark.createDataFrame(
                 rows, "host string, r_prefixes array<string>, r_rps double"
             )
 
-        for rnd in range(start_round, cfg.max_rounds):
-            t0 = time.time()
-            frontier, seen = state["frontier"], state["seen"]
-
-            # 1. candidates = frontier ∖ seen — probe the incrementally-
-            # maintained bloom state (never rebuilt from the full seen set)
-            # + exact rescue for bloom-positives
-            blooms = state["blooms"]
-            candidates = bloom.bloom_anti_join(
-                frontier, seen_store, blooms, n_partitions=cfg.bloom_partitions
-            )
-
-            # 2. deterministic page: top page_size by (priority, canon_url)
-            page = (
-                candidates.orderBy("priority", "canon_url")
-                .limit(cfg.page_size)
-                .cache()
-            )
-            n_page = page.count()
-            if n_page == 0:
-                page.unpersist()
-                break
-
-            # 3a. robots budgeting: Disallow prefixes route to errors+seen,
-            # Crawl-delay overrides the per-host rps (north rule).  The page
-            # broadcast-joins the run-level robots dim on host (hosts absent
-            # from the dim get the default policy) — the exact shape that
-            # holds at 10^10 scale, with zero driver-side data dependency
-            # inside the round loop.
-            if cfg.respect_robots:
-                def_prefixes, def_rps = robots_default
-                def_prefix_arr = (
-                    F.array(*[F.lit(p) for p in def_prefixes])
-                    if def_prefixes
-                    else F.array().cast("array<string>")
+        try:
+            for rnd in range(start_round, cfg.max_rounds):
+                t0 = time.time()
+                page, n_page = self._probe_page(rnd, state)
+                if n_page == 0:
+                    page.unpersist()
+                    break
+                t_page = time.time()
+                flagged_page, allowed, blocked = self._robots_split(rnd, page)
+                fetched, counts = self._schedule_fetch(rnd, allowed, n_page)
+                mutable, deltas, n_blocked = self._route(
+                    rnd, state, page, fetched, blocked
                 )
-                # path-less URL => '/', matching robots.url_path: a
-                # Disallow prefix of '/' (disallow-all) must block
-                # 'https://host' too — the bare regex yields '' there,
-                # which startswith('/') would miss (parity + policy bug).
-                raw_path = F.regexp_extract(
-                    "canon_url", r"^https?://[^/]+([^?#]*)", 1
-                )
-                path = F.when(raw_path == "", F.lit("/")).otherwise(raw_path)
-                disallowed_flag = F.exists(
-                    F.coalesce(F.col("r_prefixes"), def_prefix_arr),
-                    lambda p: path.startswith(p),
-                )
-                flagged_page = (
-                    page.join(F.broadcast(robots_dim), "host", "left")
-                    .withColumn("_disallowed", disallowed_flag)
-                    .withColumn("_rps_host", F.coalesce("r_rps", F.lit(def_rps)))
-                    .drop("r_prefixes", "r_rps")
-                    .cache()
-                )
-                blocked = flagged_page.filter(F.col("_disallowed")).drop(
-                    "_disallowed", "_rps_host"
-                )
-                allowed = flagged_page.filter(~F.col("_disallowed")).drop("_disallowed")
-                rps_col = F.col("_rps_host")
-            else:
-                flagged_page = None
-                blocked = page.filter(F.lit(False))
-                allowed = page
-                rps_col = None
-
-            # 3b. politeness: salted per-host sub-queues → time_slot at the
-            # per-host rps budget
-            scheduled = politeness_slots(
-                allowed, cfg.rps, cfg.politeness_salts, rps_col=rps_col
-            )
-            if rps_col is not None:
-                scheduled = scheduled.drop("_rps_host")
-
-            # 4. fetch over round-robin partitions (balanced by
-            # construction).  Politeness is fully encoded in time_slot by
-            # this point, so partitioning is purely a load-balancing choice:
-            # the earlier (host, url_hash % host_salt) hash partitioning put
-            # 70%-hot-host traffic behind ~host_salt keys hashed into
-            # n_fetch bins — balls-into-bins gave some tasks 3x the mean
-            # (measured max/mean 3.30 at 64 salts / 128 tasks), a straggler
-            # tail that costs ~25% of 4N-core scaling efficiency while
-            # N-core runs amortize it over more waves.  RoundRobin gets
-            # max/mean 1.002.  (A connection-pooling fetcher that wants
-            # host affinity should group WITHIN a partition — pandas
-            # groupby inside the batch — not skew the partitioning.)
-            # Partition count adapts to the page: retry-tail rounds with a
-            # handful of URLs would otherwise spin up cfg.fetch_partitions
-            # Python workers for nothing (~2.5 s fixed cost per near-empty
-            # round, measured); n_page is already known from the page count.
-            n_fetch = max(1, min(cfg.fetch_partitions, (n_page + 63) // 64))
-            fetched = (
-                scheduled.repartition(n_fetch)
-                .mapInPandas(_fetch_batches, _FETCH_SCHEMA)
-                .withColumn("round", F.lit(rnd))
-                .cache()
-            )
-
-            ok = fetched.filter(F.col("status") == "ok")
-            retry = fetched.filter(F.col("status") == "retry")
-            err_now = fetched.filter(F.col("status") == "error")
-            err_exhausted = retry.filter(F.col("attempt") + 1 > cfg.max_retries)
-            retry_next = retry.filter(F.col("attempt") + 1 <= cfg.max_retries)
-
-            # 5a. manifest (crawl-order contract: rank by (priority,
-            # canon_url)).  Two-phase rank: a bare Window.orderBy would pull
-            # the whole page through ONE task; range-partition + local
-            # row_number + prefix-sum offsets gives the identical ranking
-            # N-way parallel (operators/ranking.py).
-            manifest_new = two_phase_rank(
-                ok.select(
-                    "round", "canon_url", "dataset_id", "title", "host",
-                    "time_slot", "attempt", "priority",
-                ),
-                ["priority", "canon_url"],
-                num_partitions=max(2, cfg.fetch_partitions // 4),
-            ).select(
-                "round",
-                # bounded by page_size — safe to narrow the operator's long
-                F.col("rank").cast("int").alias("rank"),
-                "canon_url", "dataset_id", "title", "host",
-                "time_slot", "attempt",
-            )
-
-            robots_blocked = blocked.select(
-                F.lit(rnd).alias("round"),
-                "canon_url",
-                F.regexp_extract("canon_url", r"/(?:dataset|hdx)/([^/]+)", 1).alias(
-                    "dataset_id"
-                ),
-                F.lit("robots_disallowed").alias("error"),
-            )
-            errors_new = err_now.select(
-                "round", "canon_url", "dataset_id",
-                F.lit("permanent_fetch_error").alias("error"),
-            ).unionByName(
-                err_exhausted.select(
-                    "round", "canon_url", "dataset_id",
-                    F.lit("max_retries_exceeded").alias("error"),
-                )
-            ).unionByName(robots_blocked)
-
-            docs_new = build_spans(ok)
-
-            # 5b. frontier′ = (frontier ∖ page) ∪ retries(attempt+1) ∪ discovered
-            remaining = frontier.join(
-                page.select("url_hash"), "url_hash", "left_anti"
-            )
-            retry_rows = retry_next.select(
-                "canon_url", "url_hash", "host", "priority", "depth",
-                (F.col("attempt") + 1).alias("attempt"),
-            )
-            # min-depth aggregation, NOT dropDuplicates: when one URL is
-            # discovered by parents at different depths in the same round,
-            # dropDuplicates keeps an arbitrary task's row (crawl order then
-            # varies run-to-run), while the simulator keeps the first
-            # parent in manifest rank order — which is exactly the min-depth
-            # parent (rank leads with priority = depth).  min() is the
-            # deterministic engine equivalent.
-            discovered = (
-                ok.select(F.explode("discovered").alias("raw_url"), "depth")
-                .select(
-                    F.trim("raw_url").alias("canon_url"),
-                    url_hash(F.trim("raw_url")).alias("url_hash"),
-                    F.regexp_extract(F.trim("raw_url"), r"^https?://([^/]+)", 1).alias("host"),
-                    (F.col("depth") + 1).alias("depth"),
-                )
-                .groupBy("url_hash", "canon_url", "host")
-                .agg(F.min("depth").alias("depth"))
-                .select(
-                    "canon_url", "url_hash", "host",
-                    F.col("depth").alias("priority"), "depth",
-                    F.lit(0).alias("attempt"),
-                )
-                .join(frontier.select("url_hash"), "url_hash", "left_anti")
-                .join(seen_store.select("url_hash"), "url_hash", "left_anti")
-            )
-            frontier_next = remaining.unionByName(retry_rows).unionByName(
-                discovered.select(*[f.name for f in FRONTIER_SCHEMA.fields])
-            )
-
-            # 5c. seen′ = seen ∪ finalized (ok + permanent/exhausted errors
-            # + robots-disallowed, so blocked URLs can never requeue);
-            # blooms′ = blooms OR bloom(finalized) — incremental, O(round)
-            finalized = (
-                ok.select("url_hash", "canon_url")
-                .unionByName(err_now.select("url_hash", "canon_url"))
-                .unionByName(err_exhausted.select("url_hash", "canon_url"))
-                .unionByName(blocked.select("url_hash", "canon_url"))
-            )
-            seen_next = seen.unionByName(finalized)
-            blooms_next = bloom.merge_blooms(
-                blooms, finalized, n_partitions=cfg.bloom_partitions,
-                seen=seen_next,
-            )
-
-            new_mutable = {
-                "frontier": frontier_next,
-                "blooms": blooms_next,
-            }
-            deltas = {
-                # seen is append-only: persist ONLY this round's finalized
-                # URLs; _read_state unions the per-round deltas back into
-                # the full seen set (write cost O(round), not O(history)).
-                "seen": finalized.dropDuplicates(["url_hash"]),
-                "manifest": manifest_new,
-                "errors": errors_new,
-                "documents": docs_new,
-            }
-
-            status_counts = {
-                (r["status"], r["exhausted"]): r["cnt"]
-                for r in fetched.groupBy(
-                    "status", (F.col("attempt") + 1 > cfg.max_retries).alias("exhausted")
-                ).agg(F.count("*").alias("cnt")).collect()
-            }
-            n_ok = sum(v for (s, _e), v in status_counts.items() if s == "ok")
-            n_retry = status_counts.get(("retry", False), 0)
-            n_err = sum(
-                v for (s, e), v in status_counts.items()
-                if s == "error" or (s == "retry" and e)
-            )
-            n_blocked = blocked.count() if cfg.respect_robots else 0
-            t_fetch_done = time.time()
-
-            # 6. atomic checkpoint (resume point)
-            metrics = {
-                "round": rnd,
-                "n_page": n_page,
-                "n_robots_blocked": n_blocked,
-                "n_ok": n_ok,
-                "n_retry": n_retry,
-                "n_error": n_err,
-                "politeness_rps": cfg.rps,
-            }
-            self._write_state(rnd, new_mutable, deltas, metrics)
-            # append THIS round's committed seen delta into the bucketed
-            # store (read back from the checkpoint — exact committed rows,
-            # and counted inside the round's wall time)
-            seen_store = self._append_seen_store(rnd)
-            wall = time.time() - t0
-            metrics.update(
-                {
-                    "wall_sec": round(wall, 3),
-                    "fetch_phase_sec": round(t_fetch_done - t0, 3),
-                    "checkpoint_sec": round(wall - (t_fetch_done - t0), 3),
-                    "urls_per_sec": round(n_page / wall, 2) if wall > 0 else None,
+                t_routed = time.time()
+                metrics = {
+                    "round": rnd,
+                    "n_page": n_page,
+                    "n_robots_blocked": n_blocked,
+                    **counts,
+                    "politeness_rps": cfg.rps,
+                    "page_sec": round(t_page - t0, 3),
+                    "fetch_phase_sec": round(t_routed - t0, 3),
                 }
-            )
-            self.metrics.rounds.append(metrics)
-            state = self._read_state(rnd)  # re-root lineage on the snapshot
-            fetched.unpersist()
-            page.unpersist()
-            if flagged_page is not None:
-                flagged_page.unpersist()
-            bloom.release_persisted()
-            ranking.release_persisted()
+                self._write_state(rnd, mutable, deltas, metrics)  # resume point
+                t_committed = time.time()
+                # append THIS round's committed seen delta into the bucketed
+                # store (read back from the checkpoint — exact committed
+                # rows, and counted inside the round's wall time)
+                self._seen_store = self._append_seen_store(rnd)
+                t_end = time.time()
+                wall = t_end - t0
+                metrics.update(
+                    {
+                        "wall_sec": round(wall, 3),
+                        "checkpoint_sec": round(t_end - t_routed, 3),
+                        "seen_append_sec": round(t_end - t_committed, 3),
+                        "urls_per_sec": round(n_page / wall, 2) if wall > 0 else None,
+                    }
+                )
+                self.metrics.rounds.append(metrics)
+                self._describe(rnd, "reload")
+                state = self._read_state(rnd)  # re-root lineage on the snapshot
+                for df in (fetched, page, flagged_page):
+                    if df is not None:
+                        df.unpersist()
+                bloom.release_persisted()
+                ranking.release_persisted()
+        finally:
+            sc.setJobDescription(caller_description)
 
-        final_round = self.latest_committed_round()
         return {
-            "final_round": final_round,
+            "final_round": self.latest_committed_round(),
             "metrics": self.metrics.rounds,
             "state": state,
         }

@@ -15,7 +15,8 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", master="local[8]", shuffle_partitions=8)
+    cores = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    s = get_spark("pytest", master=f"local[{cores}]", shuffle_partitions=8)
     yield s
     # drop the catalog-bucketed seen stores created by throwaway test
     # checkpoint dirs (one table per ckpt path) so warehouse disk doesn't

@@ -129,7 +129,7 @@ def test_expansion_happened(spark_result):
 def test_resume_identical_state(spark, sim_result, spark_result, tmp_path):
     """Kill after round 0 (simulated by a fresh engine over a checkpoint dir
     truncated to round 0) → resume → final state identical to the
-    uninterrupted run."""
+    uninterrupted run: manifest, seen set, errors and documents."""
     ckpt = str(tmp_path / "ckpt2")
     engine = CrawlEngine(spark, ckpt, CFG)
 
@@ -146,9 +146,16 @@ def test_resume_identical_state(spark, sim_result, spark_result, tmp_path):
     assert _spark_manifest_ordered(out2["state"]) == _spark_manifest_ordered(
         spark_result["state"]
     )
-    seen1 = {r["canon_url"] for r in spark_result["state"]["seen"].collect()}
-    seen2 = {r["canon_url"] for r in out2["state"]["seen"].collect()}
-    assert seen1 == seen2
+    for table, cols in (
+        ("seen", ["canon_url"]),
+        ("errors", ["round", "canon_url", "dataset_id", "error"]),
+        ("documents", ["doc_id", "spans"]),
+    ):
+        rows = [
+            sorted(tuple(r) for r in out["state"][table].select(*cols).collect())
+            for out in (spark_result, out2)
+        ]
+        assert rows[0] == rows[1], table
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
@@ -456,7 +463,7 @@ def test_resume_ignores_tmp_dir_with_commit_marker(spark, tmp_path):
 
 def test_resumed_run_reports_all_round_metrics(spark, tmp_path):
     """run()['metrics'] after a resume must cover the pre-crash rounds too
-    (reloaded from the commit markers)."""
+    (reloaded from the commit markers, phase walls included)."""
     ckpt = str(tmp_path / "ckpt_metrics")
     cfg1 = CrawlConfig(**{**CFG.__dict__, "max_rounds": 1})
     CrawlEngine(spark, ckpt, cfg1).run(seed_urls=synthetic.seed_urls(40))
@@ -464,6 +471,9 @@ def test_resumed_run_reports_all_round_metrics(spark, tmp_path):
     rounds = [m["round"] for m in out["metrics"]]
     assert rounds[0] == 0 and rounds == sorted(rounds)
     assert len(rounds) == out["final_round"] + 1
+    reloaded = out["metrics"][0]
+    assert 0 <= reloaded["page_sec"] <= reloaded["fetch_phase_sec"]
+    assert reloaded["write_sec"] >= 0
 
 
 def test_duplicate_seeds_fetch_once(spark, tmp_path):
@@ -618,3 +628,26 @@ def test_seen_store_orphan_warehouse_dir_is_cleared(spark, tmp_path):
     seen = sorted(r["url_hash"] for r in out["state"]["seen"].collect())
     assert sorted(r["url_hash"] for r in store.collect()) == seen
     assert len(seen) > 0
+
+
+def test_bench_crawl_block_runs_one_engine_round(spark, tmp_path, monkeypatch):
+    """bench.py's crawl block is one real CrawlEngine round: its document
+    count is the round's ok count (cross-checked against the simulator's
+    round-0 manifest), and it leaves no seen-store table or checkpoint."""
+    import os
+    import tempfile
+
+    import bench
+
+    def seen_stores():
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("seen_store_")}
+
+    before = seen_stores()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    res = bench.crawl_round_throughput(spark, 200, 4)
+
+    sim = simulator.run_crawl(synthetic.seed_urls(200), page_size=200, max_rounds=1)
+    assert res["n_docs"] == len(sim.manifest) > 0
+    assert res["urls_per_sec"] > 0 and res["docs_per_sec"] > 0
+    assert seen_stores() == before
+    assert os.listdir(tmp_path) == []

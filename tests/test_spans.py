@@ -154,32 +154,17 @@ def test_random_span_arrays_match_python_reference(spark):
         assert m["text_chars"] == e["text_chars"], doc_id
 
 
-def test_frontier_spans_reassemble(spark):
+def test_frontier_spans_reassemble(spark, tmp_path):
     """The analytics operators consume the CRAWL ENGINE's own output shape:
-    reassembling the frontier's build_spans documents reproduces
+    reassembling the documents of one real CrawlEngine round reproduces
     title+notes and counts media spans = resource count."""
     from hdx_metadata_crawler_spark.sources import synthetic
-    from hdx_metadata_crawler_spark.streaming.frontier import (
-        _FETCH_SCHEMA,
-        _fetch_batches,
-        build_spans,
-    )
-    from hdx_metadata_crawler_spark.functions.url import url_hash
+    from hdx_metadata_crawler_spark.streaming.frontier import CrawlConfig, CrawlEngine
 
-    urls = synthetic.seed_urls(40)
-    df = spark.createDataFrame([(u,) for u in urls], "canon_url string").select(
-        "canon_url",
-        url_hash(F.col("canon_url")).alias("url_hash"),
-        F.lit("h").alias("host"),
-        F.lit(0).alias("priority"),
-        F.lit(0).alias("depth"),
-        F.lit(0).alias("attempt"),
-        F.lit(0).alias("time_slot"),
+    engine = CrawlEngine(
+        spark, str(tmp_path / "ckpt"), CrawlConfig(page_size=40, max_rounds=1)
     )
-    fetched = df.mapInPandas(_fetch_batches, _FETCH_SCHEMA).withColumn(
-        "round", F.lit(0)
-    )
-    docs = build_spans(fetched.filter(F.col("status") == "ok"))
+    docs = engine.run(seed_urls=synthetic.seed_urls(40))["state"]["documents"]
     out = sp.reassemble(docs.select("doc_id", "spans"))
     rows = out.collect()
     assert len(rows) > 0
